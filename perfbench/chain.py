@@ -66,30 +66,18 @@ def _bronze_schema(typed: T.StructType) -> T.StructType:
 class TripChain:
     """One independent instance of the chain under ``root``."""
 
-    def __init__(
-        self,
-        spark,
-        root: str,
-        *,
-        max_files_per_trigger: int | None = None,
-        wire_root: str | None = None,
-    ):
+    def __init__(self, spark, root: str):
         self.spark = spark
         self.root = root
-        self.mfpt = max_files_per_trigger
-        self.wire_root = wire_root or self.path("wire")
         for kind in _STREAMS:
-            os.makedirs(os.path.join(self.wire_root, kind), exist_ok=True)
+            os.makedirs(self.path("wire", kind), exist_ok=True)
 
     def path(self, *parts: str) -> str:
         return os.path.join(self.root, *parts)
 
     def ingest(self, kind: str) -> None:
         wire, required, optional, _, ts_col = _STREAMS[kind]
-        stream = read_wire_stream(
-            self.spark, os.path.join(self.wire_root, kind), wire,
-            max_files_per_trigger=self.mfpt,
-        )
+        stream = read_wire_stream(self.spark, self.path("wire", kind), wire)
         run_ingest(
             stream,
             bronze_dir=self.path("bronze", kind),
@@ -148,16 +136,19 @@ class TripChain:
 
     # -- correctness --------------------------------------------------
 
-    def mismatches(self, expected: dict, counts: dict) -> list[str]:
+    def mismatches(self, expected: dict, counts: dict, *, ingest_only: bool = False) -> list[str]:
         """Compare bronze, DLQ, completed (``counts`` from
-        :meth:`counts`) and gold with the expected answer; one message
-        per disagreement."""
+        :meth:`counts`) and gold with the expected answer, or only
+        bronze and DLQ with ``ingest_only``; one message per
+        disagreement."""
         bad = []
         for kind in _STREAMS:
             for table in ("bronze", "dlq"):
                 got, want = counts[kind][f"{table}_rows"], expected[table][kind]
                 if got != want:
                     bad.append(f"{table} {kind}: {got} != {want}")
+        if ingest_only:
+            return bad
         got = counts["completed"]["rows"]
         if got != expected["completed"]:
             bad.append(f"completed: {got} != {expected['completed']}")

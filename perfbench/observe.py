@@ -63,6 +63,12 @@ def lags(due: list[float], committed: list[float | None]) -> list[float]:
     return [c - d for d, c in zip(due, committed) if c is not None]
 
 
+def keepup(sizes: list[int], committed: list[float | None], by: float) -> float:
+    """Share of the events (``sizes`` per file) whose file was in gold
+    by ``by``; a file committed later counts like one never committed."""
+    return sum(n for n, c in zip(sizes, committed) if c is not None and c <= by) / sum(sizes)
+
+
 # -- spans --------------------------------------------------------------
 
 
@@ -200,6 +206,16 @@ class ProgressRecorder(StreamingQueryListener):
     def snapshot(self) -> list[dict]:
         with self._lock:
             return list(self.progress)
+
+    def wait_for(self, pred, n: int, timeout: float = 10.0) -> list[dict]:
+        """Wait until ``n`` progress events satisfy ``pred`` (or the
+        timeout passes), then return those seen."""
+        deadline = time.time() + timeout
+        while True:
+            got = [p for p in self.snapshot() if pred(p)]
+            if len(got) >= n or time.time() >= deadline:
+                return got
+            time.sleep(0.05)
 
     def settle(self, timeout: float = 5.0) -> list[dict]:
         """Wait until no progress arrived for a short while (the bus

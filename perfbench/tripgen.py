@@ -15,7 +15,8 @@ files are split into micro-batches:
 - an out-of-order event lands at most one file late, and a file slice
   spans at most 30 minutes of event time, so no event is ever older than
   the completion join's 1-hour watermark when it arrives;
-- trips last 5-55 minutes, inside the join's 4-hour range bound;
+- trips last 5-55 minutes (an assumption), inside the join's 4-hour
+  range bound;
 - malformed lines never share a trip id with a real trip.
 
 The expected bronze / DLQ counts, completed trips and daily KPIs are
@@ -47,7 +48,13 @@ KINDS = ("start", "end")
 @dataclass(frozen=True)
 class Traffic:
     """The traffic dimensions the ingest -> completion -> KPI chain's
-    behaviour depends on."""
+    behaviour depends on.
+
+    Only ``trips_per_file`` (the reference simulator's 250-record batch)
+    has a source. The reference gives the kinds of perturbation but no
+    shares of them, nor trip lengths; every other default here is an
+    unverified assumption, listed with its reason in METRICS.md.
+    """
 
     trips_per_file: int = 250
     redelivery_share: float = 0.05
@@ -176,7 +183,7 @@ class TripWire:
 
     # -- files --------------------------------------------------------
 
-    def write(self, kind: str, i: int, wire_dir: str, mtime: float | None = None) -> str:
+    def write(self, kind: str, i: int, wire_dir: str) -> str:
         """Write file ``i`` of ``kind`` atomically into ``wire_dir`` (the
         file source must never list a half-written file)."""
         f = self.files[kind][i]
@@ -184,20 +191,17 @@ class TripWire:
         tmp = os.path.join(os.path.dirname(wire_dir), f".{kind}-{i}.tmp")
         with open(tmp, "w") as fh:
             fh.write("\n".join(f.lines) + "\n")
-        if mtime is not None:
-            os.utime(tmp, (mtime, mtime))
         dst = os.path.join(wire_dir, name)
         os.replace(tmp, dst)
         return dst
 
     def write_all(self, wire_root: str) -> None:
-        """Stage the whole backlog, file order pinned by mtime (the file
-        source orders a trigger's files by modification time)."""
+        """Stage every file of both streams as a backlog."""
         for kind in KINDS:
             d = os.path.join(wire_root, kind)
             os.makedirs(d, exist_ok=True)
             for i in range(self.n_files):
-                self.write(kind, i, d, mtime=1_700_000_000 + i)
+                self.write(kind, i, d)
 
     # -- expected answer ----------------------------------------------
 
