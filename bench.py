@@ -12,6 +12,14 @@ Timing is STEADY-STATE: each query runs once untimed (paying JVM JIT
 the session has already loaded) and the second run is reported. The
 first-run penalty was measured at 2-3x and grew with package size
 across rounds, drowning the plan cost the benchmark exists to track.
+
+The timed run is split where it passes from the registry function to
+the write: ``build_s`` is the function call (plan construction plus
+any eager work the entry does, e.g. a whole availableNow stream run),
+``exec_s`` the noop write. Each phase runs under job group
+``<name>:build`` / ``<name>:exec`` and its job count is recorded.
+The split lands in the side artifact only (``phases``); the stdout
+line keeps its keys, and ``queries[name]`` is build plus exec.
 """
 
 from __future__ import annotations
@@ -333,6 +341,8 @@ def main() -> None:
             )
             raise SystemExit(4)
     timings: dict[str, float] = {}
+    phases: dict[str, dict[str, float | int]] = {}
+    sc = spark.sparkContext
     # session-level warm-up: JVM JIT keeps re-tiering through the
     # first handful of jobs, so the EARLIEST benched queries (the
     # flagship runs first) otherwise absorb multi-run compile residue
@@ -350,9 +360,25 @@ def main() -> None:
         # canonicalized plan, so the timed invocation reuses them —
         # steady-state semantics)
         fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+        build, run = f"{name}:build", f"{name}:exec"
+        sc.setJobGroup(build, name)
         t0 = time.time()
-        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        timings[name] = round(time.time() - t0, 3)
+        df = fn(spark, sf_dir)
+        t1 = time.time()
+        sc.setJobGroup(run, name)
+        df.write.mode("overwrite").format("noop").save()
+        t2 = time.time()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        timings[name] = round(t2 - t0, 3)
+        # jobs launched on this thread only: a stream entry's
+        # micro-batch jobs run under the streaming query's own group
+        jobs = sc.statusTracker().getJobIdsForGroup
+        phases[name] = {
+            "build_s": round(t1 - t0, 3),
+            "exec_s": round(t2 - t1, 3),
+            "build_jobs": len(jobs(build)),
+            "exec_jobs": len(jobs(run)),
+        }
         # then drop this query's blocks: no entry shares caches with
         # another, so clearing bounds executor storage across the
         # 60+ query session instead of leaning on GC
@@ -391,6 +417,7 @@ def main() -> None:
     # which refuses unless the stamp is clean and matches HEAD (round-7
     # judge item #7: a `git add -A` once swept a contended smoke run
     # over the round's official artifact). Overridable for ad-hoc runs.
+    full = {**result, "phases": phases}
     repo_dir = os.path.dirname(os.path.abspath(__file__))
     artifact = os.environ.get(
         "SPARK_GRAFT_BENCH_OUT",
@@ -400,7 +427,7 @@ def main() -> None:
         path = os.path.join(repo_dir, artifact)
         os.makedirs(os.path.dirname(path), exist_ok=True)
         with open(path, "w") as f:
-            json.dump(result, f, indent=1)
+            json.dump(full, f, indent=1)
         # Run log: every run also APPENDS one line here, so
         # tools/promote_bench.py can enforce the best-of-2 policy
         # (two same-HEAD full runs, promote the lower total, both
@@ -418,7 +445,7 @@ def main() -> None:
         runlog = os.path.join(repo_dir, "sweeps", "scratch", "runs.jsonl")
         os.makedirs(os.path.dirname(runlog), exist_ok=True)
         with open(runlog, "a") as f:
-            f.write(json.dumps(result) + "\n")
+            f.write(json.dumps(full) + "\n")
     except OSError as e:
         print(f"WARNING: run-log append failed ({e}); this run will "
               f"not count toward the best-of-2 promotion quorum",

@@ -42,6 +42,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
+from nsp_bolt_pipeline_spark.session import scoped_conf
+
 
 #: Heap budget for the hierarchical-cells checkpoint pile (all live
 #: + dead levels): below it, level checkpoints stay memory-backed and
@@ -695,14 +697,10 @@ def hierarchical_cells(
         # tests/test_plans.py). The input here is always a scan or an
         # already-checkpointed relation, so AQE has nothing to offer
         # this one query; the session value is restored immediately.
-        old = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
+        with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
             return rel.repartition(nparts, F.col(id_col)).localCheckpoint(
                 eager=True, storageLevel=ckpt_level
             )
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", old)
 
     base = _ckpt_by_id(df.select(F.col(id_col), F.col(vec_col)))
 

@@ -42,13 +42,6 @@ def daily_kpis(
     )
 
 
-def sample_rows(df: DataFrame, n: int = 5) -> list:
-    """L1: the reference's debug ``limit(5).collect()``
-    (KPI-Aggregator.py:113-114). Driver-side by design; never use in a
-    transform."""
-    return df.limit(n).collect()
-
-
 def incremental_daily_refresh(
     base: DataFrame,
     delta: DataFrame,

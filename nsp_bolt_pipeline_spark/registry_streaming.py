@@ -38,6 +38,7 @@ from nsp_bolt_pipeline_spark.registry import (
     query,
 )
 from nsp_bolt_pipeline_spark.sources.readers import read_table
+from nsp_bolt_pipeline_spark.session import scoped_conf
 from nsp_bolt_pipeline_spark.streaming.completion import (
     deduped_completion_stream,
     run_completion_join,
@@ -195,12 +196,8 @@ def _replay_shuffle(
         min(_REPLAY_MIN_PARTITIONS, cap),
         min(cap, math.ceil(per_batch / _REPLAY_PARTITION_BYTES)),
     )
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(parts)}):
         yield parts
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def _event_stream(spark: SparkSession, src: str, schema=EVENT_WIRE_SCHEMA) -> DataFrame:

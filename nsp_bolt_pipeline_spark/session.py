@@ -8,6 +8,8 @@ same configs apply (AQE, skew-join handling, partition sizing) — only
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -79,12 +81,29 @@ def get_spark(
     return spark
 
 
-def configure_for_oracle(spark: SparkSession) -> SparkSession:
-    """Pin runtime confs that affect result comparison against DuckDB.
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: Mapping[str, str]) -> Iterator[None]:
+    """Set runtime SQL confs for the body of a ``with`` block, then put
+    every key back as it was: its prior value, or unset when it was not
+    set before (so it falls back to Spark's default again). Restores on
+    normal exit and when the body raises.
 
-    Session timezone must be fixed so date extraction from naive
-    parquet timestamps is wall-clock-stable (DuckDB timestamps are
-    TZ-naive). Safe to call on a session we did not create.
+    Contract: one thread uses the session while the block is open.
+    Runtime confs are session-wide, so a query that another thread
+    plans on the same SparkSession meanwhile sees the scoped values,
+    and two overlapping scopes on one key restore in exit order, not
+    entry order. Every caller in the package opens its scope on the
+    driver thread that owns the session and runs only its own queries
+    inside it.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark
+    prior = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

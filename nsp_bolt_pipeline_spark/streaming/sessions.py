@@ -15,9 +15,10 @@ the watermark passes its end. At end-of-stream the watermark rests
 ``delay`` behind the max event time, which would strand every session
 newer than ``gap + delay``; replays that need the complete answer
 append a single far-future *flush sentinel* event under a key outside
-the real key domain (see ``flush_sentinel_ts``) whose only job is to
-push the final watermark past every real session's end — the
-availableNow no-data final batch then flushes all remaining state.
+the real key domain, stamped ``max(ts) + margin`` with ``margin`` >
+``gap + delay``, whose only job is to push the final watermark past
+every real session's end — the availableNow no-data final batch then
+flushes all remaining state.
 The sentinel's own session never closes and is never emitted.
 
 Scale notes (100 TB): state is one row per OPEN session per key —
@@ -54,15 +55,6 @@ def streaming_session_agg(
         F.col("w.end").alias("session_end"),
         *measures.keys(),
     )
-
-
-def flush_sentinel_ts(df: DataFrame, ts_col: str, *, margin: str) -> Column:
-    """Timestamp for the flush sentinel: ``max(ts) + margin`` where
-    ``margin`` must exceed ``gap + watermark_delay`` so the final
-    watermark (sentinel_ts - delay) clears every real session end
-    (max_real_ts + gap). Driver-side scalar via an aggregate row —
-    callers attach it with a crossJoin of the 1-row frame."""
-    return F.max(F.col(ts_col)) + F.expr(f"INTERVAL {margin}")
 
 
 def run_session_agg(

@@ -150,6 +150,52 @@ def test_bench_unknown_subset_name_is_an_error(tmp_path):
     assert proc.returncode == 4
 
 
+def test_bench_build_exec_split_goes_to_artifact_only(tmp_path):
+    """The timed run's build/exec split and per-phase job counts land
+    in the side artifact; the stdout line keeps exactly its keys, and
+    build + exec is the entry's reported time."""
+    out = tmp_path / "split.json"
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
+        SPARK_GRAFT_BENCH_NAMES="trip_daily_kpi",
+        SPARK_GRAFT_ALLOW_DIRTY="1",
+        SPARK_GRAFT_BENCH_OUT=str(out),
+    )
+    proc = subprocess.run(
+        [sys.executable, "bench.py"],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    line = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert list(line) == [
+        "metric", "value", "unit", "queries", "sf", "git", "timing", "machine",
+    ]
+    artifact = json.loads(out.read_text())
+    phase = artifact["phases"]["trip_daily_kpi"]
+    assert phase["build_s"] + phase["exec_s"] == pytest.approx(
+        line["queries"]["trip_daily_kpi"], abs=0.002
+    )
+    assert phase["exec_jobs"] >= 1
+
+
+def test_ab_bench_failed_stash_pop_names_the_stash(scratch_repo, monkeypatch, capsys):
+    import ab_bench
+
+    monkeypatch.setattr(ab_bench, "REPO", scratch_repo)
+    with open(os.path.join(scratch_repo, "new.txt"), "w") as f:
+        f.write("mine")
+    _git(scratch_repo, "stash", "push", "-u", "-q")
+    # a file the probe run left behind collides with the stashed one
+    with open(os.path.join(scratch_repo, "new.txt"), "w") as f:
+        f.write("bench leftover")
+    sha = _git(scratch_repo, "rev-parse", "stash@{0}").stdout.strip()
+    assert not ab_bench._pop_stash(sha)
+    err = capsys.readouterr().err
+    assert sha in err and "stash pop" in err
+    assert _git(scratch_repo, "stash", "list").stdout.strip()
+
+
 # ---- promote_bench gate ----
 
 def _artifact(**over):

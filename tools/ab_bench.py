@@ -13,7 +13,9 @@ Usage:
     python tools/ab_bench.py name1,name2 [-n 3] [--sf /root/testdata/sf0.1]
 
 Requires uncommitted changes (otherwise there is nothing to A/B).
-Restores the working tree (stash pop) even on error/interrupt.
+Unknown query names are refused before the first run. Restores the
+working tree (stash pop) even on error/interrupt; if the pop itself
+fails, the tool stops and prints the stash entry to recover by hand.
 """
 
 from __future__ import annotations
@@ -67,12 +69,38 @@ def _run_bench(names: str, sf_dir: str) -> dict[str, float]:
     return json.loads(line)["queries"]
 
 
+def _pop_stash(sha: str) -> bool:
+    """Pop the probe stash; on failure say where the changes are."""
+    try:
+        _git("stash", "pop", "-q")
+        return True
+    except subprocess.CalledProcessError as e:
+        print(
+            f"git stash pop failed: {e.stderr.strip()}\n"
+            f"your working-tree changes are still in stash@{{0}} ({sha}); "
+            f"clear the conflicting files, then recover them with:\n"
+            f"  git -C {REPO} stash pop",
+            file=sys.stderr,
+        )
+        return False
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", help="comma-separated query names")
     ap.add_argument("-n", type=int, default=3, help="A/B pairs")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     args = ap.parse_args()
+
+    names = [n.strip() for n in args.names.split(",") if n.strip()]
+    sys.path.insert(0, REPO)
+    from nsp_bolt_pipeline_spark import registry
+
+    registry.load_all()
+    unknown = [n for n in names if n not in registry.REGISTRY]
+    if unknown:
+        print(f"unknown query names: {unknown}", file=sys.stderr)
+        return 4
 
     if not _git("status", "--porcelain"):
         print("working tree is clean — nothing to A/B", file=sys.stderr)
@@ -86,11 +114,12 @@ def main() -> int:
             print(f"[{i + 1}/{args.n}] A (HEAD) ...", file=sys.stderr)
             a_runs.append(_run_bench(args.names, args.sf))
         finally:
-            _git("stash", "pop", "-q")
+            popped = _pop_stash(_git("rev-parse", "stash@{0}"))
+        if not popped:
+            return 3
         print(f"[{i + 1}/{args.n}] B (working tree) ...", file=sys.stderr)
         b_runs.append(_run_bench(args.names, args.sf))
 
-    names = [n.strip() for n in args.names.split(",") if n.strip()]
     rows = []
     for name in names:
         a = statistics.median(r[name] for r in a_runs if name in r)
