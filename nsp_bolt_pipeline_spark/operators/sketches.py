@@ -42,7 +42,6 @@ CMS_DEPTH = 4
 CMS_WIDTH = 512
 
 BLOOM_BITS = 4096  # m — demo/default for the *bounded-key* entries
-BLOOM_WORDS = BLOOM_BITS // 32
 BLOOM_K = 3
 
 
@@ -275,7 +274,6 @@ def bloom_membership_stats(
 HLL_P = 6  # 2^6 = 64 registers
 HLL_M = 1 << HLL_P
 HLL_ALPHA = 0.709  # alpha_64 (Flajolet et al., table for m = 64)
-_HLL_SUFFIX_BITS = 48 - HLL_P
 
 
 def hll_registers(

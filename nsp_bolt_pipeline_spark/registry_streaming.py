@@ -1,5 +1,5 @@
 """Streaming oracle queries: each runs a real Structured Streaming
-query with ``trigger(availableNow=True)`` over a deterministic JSON
+query to completion (``streaming.run.drain``) over a deterministic JSON
 dump of the ``events`` table, then returns the materialized sink for
 the driver's DuckDB hash compare. Streaming result ≡ batch result is
 the whole point (SURVEY.md §2.8): the same oracle that verifies the
@@ -14,6 +14,7 @@ same winners the batch oracle's ``row_number() = 1`` does.
 
 from __future__ import annotations
 
+import json
 import os
 import tempfile
 from contextlib import contextmanager as _contextmanager
@@ -41,7 +42,6 @@ from nsp_bolt_pipeline_spark.sources.readers import read_table
 from nsp_bolt_pipeline_spark.session import scoped_conf
 from nsp_bolt_pipeline_spark.streaming.completion import (
     deduped_completion_stream,
-    run_completion_join,
     streaming_completed_trips,
 )
 from nsp_bolt_pipeline_spark.streaming.ingest import (
@@ -59,6 +59,7 @@ from nsp_bolt_pipeline_spark.streaming.replay import (
     dump_json_batches,
     encode_event_times,
 )
+from nsp_bolt_pipeline_spark.streaming.run import drain, run_append
 from nsp_bolt_pipeline_spark.streaming.trip_state import track_trip_lifecycle
 
 #: events wire schema: ts travels as epoch-micros (see module docstring).
@@ -73,15 +74,17 @@ EVENT_WIRE_SCHEMA = T.StructType(
     ]
 )
 
+
+def _event_wire(*cols: str) -> T.StructType:
+    """EVENT_WIRE_SCHEMA narrowed to ``cols``, in its own field order."""
+    return T.StructType([f for f in EVENT_WIRE_SCHEMA.fields if f.name in cols])
+
+
 #: variant for the DLQ demo: value arrives as a *string* wire field.
 EVENT_WIRE_SCHEMA_STR_VALUE = T.StructType(
     [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.LongType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.StringType()),
-        T.StructField("props", T.StringType()),
+        T.StructField(f.name, T.StringType()) if f.name == "value" else f
+        for f in EVENT_WIRE_SCHEMA.fields
     ]
 )
 
@@ -143,6 +146,28 @@ def _dump_events_df(ev: DataFrame, out_dir: str) -> None:
 
 def _dump_events(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     _dump_events_df(read_table(spark, sf_dir, "events"), out_dir)
+
+
+def _dump_event_days(ev: DataFrame, out_dir: str) -> int:
+    """Write one wire file per event day (rows in (ts, event_id) order)
+    with ascending mtimes, so a ``maxFilesPerTrigger=1`` source replays
+    the days in order; returns the day count. Collects on the driver:
+    replay shaping only, the pipelines under test never collect."""
+    by_day: dict[int, list] = {}
+    for r in encode_event_times(ev, ["ts"]).collect():
+        by_day.setdefault(int(r["ts"]) // 86_400_000_000, []).append(r)
+    os.makedirs(out_dir, exist_ok=True)
+    base_mtime = 1_700_000_000
+    for i, day in enumerate(sorted(by_day)):
+        rows = sorted(
+            by_day[day], key=lambda r: (int(r["ts"]), int(r["event_id"]))
+        )
+        path = os.path.join(out_dir, f"day_{i:03d}.json")
+        with open(path, "w") as f:
+            for r in rows:
+                f.write(json.dumps(r.asDict()) + "\n")
+        os.utime(path, (base_mtime + i, base_mtime + i))
+    return len(by_day)
 
 
 #: Target bytes per micro-batch shuffle partition. AQE is disabled in
@@ -312,26 +337,9 @@ def q_stream_d1_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    # one wire file per event day, written with explicit ascending
-    # mtimes so the file source triggers them in day order (harness-
-    # side replay shaping, same as the DQ-gate entry)
-    wire_rows = encode_event_times(ev, ["ts"]).collect()
-    by_day: dict[int, list] = {}
-    for r in wire_rows:
-        by_day.setdefault(int(r["ts"]) // 86_400_000_000, []).append(r)
-    os.makedirs(dirs["src"], exist_ok=True)
-    base_mtime = 1_700_000_000
-    for i, day in enumerate(sorted(by_day)):
-        rows = sorted(
-            by_day[day], key=lambda r: (int(r["ts"]), int(r["event_id"]))
-        )
-        path = os.path.join(dirs["src"], f"day_{i:03d}.json")
-        with open(path, "w") as f:
-            for r in rows:
-                f.write(_json.dumps(r.asDict()) + "\n")
-        os.utime(path, (base_mtime + i, base_mtime + i))
+    n_days = _dump_event_days(ev, dirs["src"])
     stream = _event_stream_max1(spark, dirs["src"])
-    with _replay_shuffle(spark, dirs["src"], n_batches=len(by_day)):
+    with _replay_shuffle(spark, dirs["src"], n_batches=n_days):
         run_ingest(
             stream,
             bronze_dir=dirs["out"],
@@ -546,7 +554,7 @@ def q_stream_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
         starts, ends, within="7 days", watermark_delay="1 hour"
     )
     with _replay_shuffle(spark, dirs["src"]):
-        run_completion_join(joined, out_dir=dirs["out"], checkpoint_dir=dirs["ckpt"])
+        run_append(joined, out_dir=dirs["out"], checkpoint_dir=dirs["ckpt"])
     return spark.read.parquet(dirs["out"]).select(
         "trip_id", "pickup_datetime", "dropoff_datetime", "fare_amount"
     )
@@ -633,15 +641,7 @@ def q_stream_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stream = decode_event_times(spark.readStream.schema(schema).json(dirs["src"]), ["ts"])
     out = track_trip_lifecycle(stream, timeout_ms=_LIFECYCLE_TIMEOUT_MS)
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", dirs["out"])
-        .option("checkpointLocation", dirs["ckpt"])
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_append(out, out_dir=dirs["out"], checkpoint_dir=dirs["ckpt"])
     return spark.read.parquet(dirs["out"]).select(
         "trip_id", "status", "pickup_datetime", "dropoff_datetime", "fare_amount"
     )
@@ -726,9 +726,7 @@ def q_stream_j1(spark: SparkSession, sf_dir: str) -> DataFrame:
         starts, ends, within="7 days", watermark_delay="1 hour"
     )
     with _replay_shuffle(spark, dirs["src"]):
-        run_completion_join(
-            joined, out_dir=dirs["out"], checkpoint_dir=dirs["ckpt"]
-        )
+        run_append(joined, out_dir=dirs["out"], checkpoint_dir=dirs["ckpt"])
     return spark.read.parquet(dirs["out"]).select(
         "trip_id",
         "pickup_datetime",
@@ -924,7 +922,6 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     session's end and append mode emits the complete answer — which
     must hash-match the BATCH session oracle exactly."""
     from nsp_bolt_pipeline_spark.streaming.sessions import (
-        run_session_agg,
         streaming_session_agg,
     )
 
@@ -953,7 +950,7 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark_delay="1 hour",
     )
     with _replay_shuffle(spark, dirs["src"]):
-        run_session_agg(sessions, out_dir=dirs["out"], checkpoint_dir=dirs["ckpt"])
+        run_append(sessions, out_dir=dirs["out"], checkpoint_dir=dirs["ckpt"])
     return (
         spark.read.parquet(dirs["out"])
         .filter(F.col("user_id") >= 0)
@@ -990,7 +987,6 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nsp_bolt_pipeline_spark.streaming.enrich import (
         enrich_stream,
         publish_dimension_snapshot,
-        run_enrich,
     )
 
     dirs = _workdir("stream_enrich")
@@ -1011,7 +1007,7 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         on=["user_id"],
     )
     with _replay_shuffle(spark, dirs["src"]):
-        run_enrich(enriched, out_dir=dirs["out"], checkpoint_dir=dirs["ckpt"])
+        run_append(enriched, out_dir=dirs["out"], checkpoint_dir=dirs["ckpt"])
     return spark.read.parquet(dirs["out"]).select(
         "event_id", "user_id", "event_type", "cohort_day"
     )
@@ -1035,7 +1031,6 @@ def q_stream_enrich_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nsp_bolt_pipeline_spark.streaming.enrich import (
         enrich_stream,
         publish_dimension_snapshot_bucketed,
-        run_enrich,
     )
 
     dirs = _workdir("stream_enrichb")
@@ -1061,7 +1056,7 @@ def q_stream_enrich_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         broadcast_dim=False,
     )
     with _replay_shuffle(spark, dirs["src"]):
-        run_enrich(enriched, out_dir=dirs["out"], checkpoint_dir=dirs["ckpt"])
+        run_append(enriched, out_dir=dirs["out"], checkpoint_dir=dirs["ckpt"])
     spark.sql(f"DROP TABLE IF EXISTS {run_tag}.cohort_snapshot")
     spark.sql(f"DROP DATABASE IF EXISTS {run_tag}")
     return spark.read.parquet(dirs["out"]).select(
@@ -1272,9 +1267,7 @@ def q_stream_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         how="left_outer",
     )
     with _replay_shuffle(spark, dirs["src"]):
-        run_completion_join(
-            joined, out_dir=dirs["out"], checkpoint_dir=dirs["ckpt"]
-        )
+        run_append(joined, out_dir=dirs["out"], checkpoint_dir=dirs["ckpt"])
     return (
         spark.read.parquet(dirs["out"])
         .filter(~F.col("trip_id").isin("-1", "-2"))
@@ -1372,27 +1365,13 @@ def q_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _dump_events_df(ev.unionByName(sentinel), dirs["src"])
 
-    wire_schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.LongType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-        ]
+    stream = _event_stream(
+        spark, dirs["src"], _event_wire("event_id", "ts", "user_id", "value")
     )
-    stream = _event_stream(spark, dirs["src"], schema=wire_schema)
     out = track_user_ewma(
         stream, horizon_ms=_EWMA_HORIZON_MS, watermark_delay="1 hour"
     )
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", dirs["out"])
-        .option("checkpointLocation", dirs["ckpt"])
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_append(out, out_dir=dirs["out"], checkpoint_dir=dirs["ckpt"])
     return spark.read.parquet(dirs["out"]).select(
         "user_id", "n_events", "ewma"
     )
@@ -1406,8 +1385,6 @@ def q_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 # — the published table is exactly the union of passing days,
 # independent of batch arrival order.
 # ---------------------------------------------------------------------------
-
-import json as _json  # noqa: E402
 
 _DQ_V_HI = 350.0
 
@@ -1446,35 +1423,9 @@ def q_stream_dq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    # one wire file per event day (harness-side replay shaping: the
-    # rows collect once to cut the dump into deterministic day
-    # batches; the gated pipeline itself never collects data)
-    wire_rows = encode_event_times(ev, ["ts"]).collect()
-    by_day: dict[int, list] = {}
-    for r in wire_rows:
-        by_day.setdefault(int(r["ts"]) // 86_400_000_000, []).append(r)
-    os.makedirs(dirs["src"], exist_ok=True)
-    for i, day in enumerate(sorted(by_day)):
-        rows = sorted(
-            by_day[day], key=lambda r: (int(r["ts"]), int(r["event_id"]))
-        )
-        with open(
-            os.path.join(dirs["src"], f"day_{i:03d}.json"), "w"
-        ) as f:
-            for r in rows:
-                f.write(_json.dumps(r.asDict()) + "\n")
-
-    wire_schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.LongType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
+    n_days = _dump_event_days(ev, dirs["src"])
     stream = decode_event_times(
-        spark.readStream.schema(wire_schema)
+        spark.readStream.schema(_event_wire(*ev.columns))
         .option("maxFilesPerTrigger", 1)
         .json(dirs["src"]),
         ["ts"],
@@ -1483,9 +1434,8 @@ def q_stream_dq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         expect_not_null("user_id"),
         expect_between("value", 0.0, _DQ_V_HI),
     ]
-    n_day_files = len(os.listdir(dirs["src"]))
-    with _replay_shuffle(spark, dirs["src"], n_batches=n_day_files):
-        q = run_dq_gated_ingest(
+    with _replay_shuffle(spark, dirs["src"], n_batches=n_days):
+        run_dq_gated_ingest(
             stream,
             suite,
             good_dir=dirs["out"],
@@ -1493,7 +1443,6 @@ def q_stream_dq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             metrics_dir=os.path.join(dirs["out"] + "_metrics"),
             checkpoint_dir=dirs["ckpt"],
         )
-        q.awaitTermination()
     from nsp_bolt_pipeline_spark.streaming.ingest import dir_exists
 
     cols = ["event_id", "ts", "user_id", "event_type", "value"]
@@ -1604,13 +1553,7 @@ def q_stream_daily_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _dump_events_df(ev.unionByName(sentinel), dirs["src"])
 
-    wire_schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.LongType()),
-        ]
-    )
-    stream = _event_stream(spark, dirs["src"], schema=wire_schema)
+    stream = _event_stream(spark, dirs["src"], _event_wire("event_id", "ts"))
     out = track_daily_bottomk(
         stream, k=_DAILY_K, horizon_ms=3_600_000, watermark_delay="1 hour"
     )
@@ -1619,15 +1562,7 @@ def q_stream_daily_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch parallelism) bounds the state-store/commit overhead the
     # two micro-batches pay
     with _replay_shuffle(spark, dirs["src"]):
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", dirs["out"])
-            .option("checkpointLocation", dirs["ckpt"])
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_append(out, out_dir=dirs["out"], checkpoint_dir=dirs["ckpt"])
     return spark.read.parquet(dirs["out"]).select("day", "event_id", "h")
 
 
@@ -1764,13 +1699,7 @@ def q_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     with _replay_shuffle(spark, dirs["src"]):
-        q = (
-            stream.writeStream.foreachBatch(process_batch)
-            .option("checkpointLocation", dirs["ckpt"])
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(stream.writeStream.foreachBatch(process_batch), dirs["ckpt"])
     return spark.read.parquet(dirs["out"]).select("vec_id", "cid")
 
 
@@ -1832,15 +1761,7 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     dump_json_batches(
         wire, dirs["src"], order_cols=["ts", "event_id"], n_files=6
     )
-    stream = (
-        decode_event_times(
-            read_wire_stream(
-                spark, dirs["src"], EVENT_WIRE_SCHEMA,
-                max_files_per_trigger=1,
-            ),
-            ["ts"],
-        )
-    )
+    stream = _event_stream_max1(spark, dirs["src"])
     with _replay_shuffle(spark, dirs["src"], n_batches=6):
         latest = run_scd2_history(
             stream,
@@ -1899,7 +1820,6 @@ def q_stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nsp_bolt_pipeline_spark.streaming.enrich import (
         enrich_stream_point_in_time,
         publish_dimension_snapshot,
-        run_enrich,
     )
 
     dirs = _workdir("stream_pit")
@@ -1925,7 +1845,7 @@ def q_stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         event_ts="ts",
     )
     with _replay_shuffle(spark, dirs["src"]):
-        run_enrich(
+        run_append(
             enriched.select(
                 "event_id", "ts", "user_id",
                 F.col("dim_priority").alias("dim_priority"),

@@ -1521,8 +1521,6 @@ def q_t19_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from datetime import timedelta  # noqa: E402
 
-from pyspark.sql import types as T  # noqa: E402
-
 
 # ---------------------------------------------------------------------------
 # Streaming greedy debounce: the sequential keep-if->=gap-after-last-
@@ -1552,12 +1550,14 @@ def q_stream_t19_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nsp_bolt_pipeline_spark.registry_streaming import (
         _dump_events_df,
         _event_stream,
+        _event_wire,
         _workdir,
     )
     from nsp_bolt_pipeline_spark.streaming.decay import (
         SENTINEL_USER,
         track_debounce,
     )
+    from nsp_bolt_pipeline_spark.streaming.run import run_append
 
     dirs = _workdir("stream_debounce")
     ev = read_table(spark, sf_dir, "events").select(
@@ -1570,27 +1570,13 @@ def q_stream_t19_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _dump_events_df(ev.unionByName(sentinel), dirs["src"])
 
-    wire_schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.LongType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-        ]
+    stream = _event_stream(
+        spark, dirs["src"], _event_wire("event_id", "ts", "user_id", "event_type")
     )
-    stream = _event_stream(spark, dirs["src"], schema=wire_schema)
     out = track_debounce(
         stream, min_gap_s=T19_GAP_S, horizon_ms=3_600_000
     )
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", dirs["out"])
-        .option("checkpointLocation", dirs["ckpt"])
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_append(out, out_dir=dirs["out"], checkpoint_dir=dirs["ckpt"])
     return spark.read.parquet(dirs["out"]).select(
         "user_id", "event_type", "event_id", "ts_us"
     )

@@ -104,15 +104,3 @@ TRIP_END_SCHEMA = T.StructType(
         T.StructField("trip_type", T.IntegerType(), True),
     ]
 )
-
-#: Daily KPI output shape (glue_jobs/KPI-Aggregator.py:104-110).
-DAILY_KPI_SCHEMA = T.StructType(
-    [
-        T.StructField("date", T.DateType()),
-        T.StructField("total_fare", T.DoubleType()),
-        T.StructField("count_trips", T.LongType()),
-        T.StructField("average_fare", T.DoubleType()),
-        T.StructField("max_fare", T.DoubleType()),
-        T.StructField("min_fare", T.DoubleType()),
-    ]
-)

@@ -40,13 +40,92 @@ def write_rejects(df: DataFrame, path: str) -> None:
     df.write.mode("append").parquet(path)
 
 
+def hadoop_fs(spark, path: str):
+    """``(fs, P)``: the Hadoop ``FileSystem`` serving ``path``'s scheme
+    (local, HDFS, S3A, ...) and the JVM ``Path`` constructor, so
+    callers write ``fs.exists(P(p))`` for any path on that store."""
+    P = spark._jvm.org.apache.hadoop.fs.Path
+    return P(path).getFileSystem(spark._jsc.hadoopConfiguration()), P
+
+
 def _dataset_bytes(spark, path: str) -> int:
     """Total on-disk bytes of a dataset via the Hadoop FileSystem API —
     works on any Hadoop-compatible store (local, HDFS, S3A)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return int(fs.getContentSummary(jpath).getLength())
+    fs, P = hadoop_fs(spark, path)
+    return int(fs.getContentSummary(P(path)).getLength())
+
+
+def version_dir(root: str, n: int) -> str:
+    """Versioned directories back the idempotent foreachBatch sinks
+    (silver SCD1, the SCD2 fragment log, the capped-completion keeper):
+    batch N overwrites ``root/v=N`` from its own rows and the version
+    :func:`version_below` N, so a retried batch rewrites exactly its
+    own version and a batch-id gap still builds on the full history."""
+    return f"{root}/v={n}"
+
+
+def list_versions(spark, root: str, *, prefix: str = "v=") -> list[int]:
+    """Ascending version numbers of the ``<prefix><n>`` dirs under
+    ``root`` (empty if ``root`` does not exist; non-integer suffixes —
+    scratch dirs — are ignored)."""
+    fs, P = hadoop_fs(spark, root)
+    if not fs.exists(P(root)):
+        return []
+    out = []
+    for st in fs.listStatus(P(root)):
+        name = st.getPath().getName()
+        if name.startswith(prefix) and name[len(prefix):].isdigit():
+            out.append(int(name[len(prefix):]))
+    return sorted(out)
+
+
+def version_below(spark, root: str, batch_id: int) -> int | None:
+    """The version batch ``batch_id`` builds on: the newest one below
+    it, or None for the first batch."""
+    return max((v for v in list_versions(spark, root) if v < batch_id),
+               default=None)
+
+
+def newest_version(spark, root: str) -> int:
+    """The newest version under ``root``; raises if there is none."""
+    versions = list_versions(spark, root)
+    if not versions:
+        raise ValueError(
+            f"{root} holds no v=<n> version: no micro-batch was delivered "
+            "(empty source or fully committed checkpoint)"
+        )
+    return versions[-1]
+
+
+def drop_versions(spark, root: str, versions) -> None:
+    fs, P = hadoop_fs(spark, root)
+    for v in versions:
+        fs.delete(P(version_dir(root, v)), True)
+
+
+def restore_aside(spark, live: str, aside: str) -> None:
+    """Undo a :func:`swap_dir` cut short: a lone ``aside`` (crash
+    between the moves) moves back; one beside ``live`` is dropped."""
+    fs, P = hadoop_fs(spark, live)
+    if fs.exists(P(aside)):
+        if fs.exists(P(live)):
+            fs.delete(P(aside), True)
+        else:
+            fs.rename(P(aside), P(live))
+
+
+def swap_dir(spark, live: str, build, *, scratch: str, aside: str) -> None:
+    """Crash-safe replace of dir ``live`` by ``build()`` (a DataFrame
+    that may read ``live``, built after an orphaned ``aside`` is
+    restored): write ``scratch``, move ``live`` to ``aside``, move
+    ``scratch`` in, delete ``aside``. Run it like any table-format
+    OPTIMIZE: while the writers of ``live`` are quiesced."""
+    restore_aside(spark, live, aside)
+    build().write.mode("overwrite").parquet(scratch)
+    fs, P = hadoop_fs(spark, live)
+    fs.rename(P(live), P(aside))
+    fs.rename(P(scratch), P(live))
+    fs.delete(P(aside), True)
 
 
 def compact_to(

@@ -13,6 +13,15 @@ validate + dedup + store (TripStartProcessor.py:60-122), DLQ routing
 - ``completion`` : stream-stream completion join with watermarks +
                    time-range state bound (the README-claimed behavior,
                    README.md:79,92, that the reference never implemented)
+- ``run``        : how every query runs — ``drain`` (checkpoint +
+                   availableNow trigger, run to completion) and
+                   ``run_append`` (the append-mode parquet sink)
+
+The sink disciplines the idempotent ``foreachBatch`` bodies share live
+in ``sources.sinks``: the ``v=<batch_id>`` versioned directories
+(``version_dir``, ``list_versions``, ``version_below``,
+``newest_version``, ``drop_versions``) and the crash-safe compaction
+swap (``swap_dir``, ``restore_aside``), both over ``hadoop_fs``.
 
 Every transform reuses the batch functions (pure DataFrame -> DataFrame),
 so an ``availableNow`` run over a deterministic event dump reproduces

@@ -20,10 +20,17 @@ batch variant.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from nsp_bolt_pipeline_spark.sources.sinks import (
+    drop_versions,
+    list_versions,
+    newest_version,
+    version_below,
+    version_dir,
+)
+from nsp_bolt_pipeline_spark.streaming.run import drain, run_append
 
 
 def streaming_completed_trips(
@@ -222,24 +229,17 @@ def run_capped_completion_log(
     one are pruned: structured streaming only ever retries the last
     uncommitted batch.
     """
-    from nsp_bolt_pipeline_spark.streaming.scd2 import (  # noqa: PLC0415
-        _list_versions,
-    )
-
     cols = list(wire.columns)
     dedup_keys = [side_col, key, *order_cols]
 
     def fold(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        versions = sorted(
-            v for v in _list_versions(spark, state_root) if v < batch_id
-        )
+        prev = version_below(spark, state_root, batch_id)
         cur = batch.select(*cols).dropDuplicates(dedup_keys)
-        if versions:
-            prev = spark.read.parquet(
-                os.path.join(state_root, f"v={versions[-1]}")
-            )
-            cur = cur.unionByName(prev).dropDuplicates(dedup_keys)
+        if prev is not None:
+            cur = cur.unionByName(
+                spark.read.parquet(version_dir(state_root, prev))
+            ).dropDuplicates(dedup_keys)
         rn = F.row_number().over(
             Window.partitionBy(side_col, key).orderBy(
                 *[F.col(c) for c in order_cols]
@@ -250,63 +250,24 @@ def run_capped_completion_log(
             .filter(F.col("_rn") <= max_rows_per_key)
             .drop("_rn")
         )
-        keep.write.mode("overwrite").parquet(
-            os.path.join(state_root, f"v={batch_id}")
-        )
+        keep.write.mode("overwrite").parquet(version_dir(state_root, batch_id))
         # prune all but the immediately-previous version (crash-retry
         # of THIS batch re-reads it; older ones are unreachable)
-        jvm = spark._jvm
-        fs = jvm.org.apache.hadoop.fs.Path(state_root).getFileSystem(
-            spark._jsc.hadoopConfiguration()
-        )
-        for v in versions[:-1]:
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(
-                    os.path.join(state_root, f"v={v}")
-                ),
-                True,
-            )
+        if prev is not None:
+            older = [v for v in list_versions(spark, state_root) if v < prev]
+            drop_versions(spark, state_root, older)
 
-    q = (
-        wire.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(wire.writeStream.foreachBatch(fold), checkpoint_dir)
 
 
 def read_keeper_state(spark, state_root: str) -> DataFrame:
     """Latest committed keeper state written by
     :func:`run_capped_completion_log` (raises if no version exists —
     the stream has not run)."""
-    from nsp_bolt_pipeline_spark.streaming.scd2 import (  # noqa: PLC0415
-        _list_versions,
-    )
-
-    versions = _list_versions(spark, state_root)
-    if not versions:
-        raise FileNotFoundError(f"no keeper state under {state_root}")
     return spark.read.parquet(
-        os.path.join(state_root, f"v={max(versions)}")
+        version_dir(state_root, newest_version(spark, state_root))
     )
 
 
-def run_completion_join(
-    completed: DataFrame,
-    *,
-    out_dir: str,
-    checkpoint_dir: str,
-) -> None:
-    """Run the join to completion (availableNow), appending matches to
-    ``out_dir``. The emitted match set is order-independent, so the
-    result is deterministic and oracle-comparable."""
-    query = (
-        completed.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+#: the completion join's sink is the plain append sink
+run_completion_join = run_append

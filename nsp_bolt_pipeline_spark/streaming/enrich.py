@@ -117,25 +117,6 @@ def enrich_stream(
     return stream.join(right, list(on), "left")
 
 
-def run_enrich(
-    enriched: DataFrame,
-    *,
-    out_dir: str,
-    checkpoint_dir: str,
-) -> None:
-    """Append-mode availableNow run of the enrichment (stateless, so
-    every input row lands exactly once regardless of watermarks)."""
-    q = (
-        enriched.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def enrich_stream_point_in_time(
     stream: DataFrame,
     history: DataFrame,

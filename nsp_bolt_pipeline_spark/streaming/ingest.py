@@ -46,6 +46,14 @@ from nsp_bolt_pipeline_spark.functions.validation import (
 )
 from nsp_bolt_pipeline_spark.operators.dedup import first_write_wins
 from nsp_bolt_pipeline_spark.sources.readers import with_corrupt_record
+from nsp_bolt_pipeline_spark.sources.sinks import (
+    hadoop_fs,
+    newest_version,
+    swap_dir,
+    version_below,
+    version_dir,
+)
+from nsp_bolt_pipeline_spark.streaming.run import drain
 
 
 def read_wire_stream(
@@ -102,10 +110,8 @@ def dir_exists(spark: SparkSession, path: str) -> bool:
     metadata check from logging a FileNotFoundException stack trace at
     WARN — which made every clean availableNow run look like a crash
     in captured bench output."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
+    fs, P = hadoop_fs(spark, path)
+    return bool(fs.exists(P(path)))
 
 
 #: bronze partition column carrying the event date when a dedup
@@ -165,9 +171,9 @@ def run_ingest(
     dedup_horizon_days: int | None = None,
     files_per_partition: int = 2,
 ) -> None:
-    """The full ingest query, run to completion with
-    ``trigger(availableNow=True)`` (the reference's daily-batch cadence,
-    O1, without giving up streaming semantics — restart with the same
+    """The full ingest query, run to completion by
+    ``streaming.run.drain`` (the reference's daily-batch cadence, O1,
+    without giving up streaming semantics — restart with the same
     checkpoint and it resumes incrementally).
 
     Per micro-batch: coerce/validate (P2/P3) -> rejects to the DLQ
@@ -329,13 +335,7 @@ def run_ingest(
         finally:
             batch.unpersist()
 
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    drain(stream.writeStream.foreachBatch(process_batch), checkpoint_dir)
 
 
 def run_silver_upsert(
@@ -362,7 +362,8 @@ def run_silver_upsert(
 
     Silver lives in VERSIONED directories (``v=<batch_id>``), the
     plain-parquet expression of a table-format transaction log: batch
-    N merges into version N-1 and writes version N. Replaying batch N
+    N merges into the latest version below N and writes version N
+    (``sources.sinks.version_below``). Replaying batch N
     after a crash rewrites exactly version N from the same inputs
     (deterministic merge), so at-least-once foreachBatch delivery
     yields an idempotent table — and the read side never observes a
@@ -374,9 +375,11 @@ def run_silver_upsert(
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        prev = f"{silver_root}/v={batch_id - 1}"
-        if batch_id > 0 and dir_exists(spark, prev):
-            target = spark.read.parquet(prev).select(*batch.columns)
+        prev = version_below(spark, silver_root, batch_id)
+        if prev is not None:
+            target = spark.read.parquet(
+                version_dir(silver_root, prev)
+            ).select(*batch.columns)
         else:
             target = batch.limit(0)
         combined = target.unionByName(batch)
@@ -387,27 +390,13 @@ def run_silver_upsert(
             .select("_w.*")
         )
         merged.write.mode("overwrite").parquet(
-            f"{silver_root}/v={batch_id}"
+            version_dir(silver_root, batch_id)
         )
 
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(stream.writeStream.foreachBatch(process_batch), checkpoint_dir)
+    return version_dir(
+        silver_root, newest_version(stream.sparkSession, silver_root)
     )
-    query.awaitTermination()
-
-    spark = stream.sparkSession
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(silver_root)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    versions = [
-        int(st.getPath().getName().split("=", 1)[1])
-        for st in fs.listStatus(root)
-        if st.getPath().getName().startswith("v=")
-    ]
-    return f"{silver_root}/v={max(versions)}"
 
 
 #: broadcast the merged sidecar only while its DENSE capacity stays
@@ -689,13 +678,7 @@ def run_corpus_ingest(
             if routed is not None:
                 routed.unpersist()
 
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    drain(stream.writeStream.foreachBatch(process_batch), checkpoint_dir)
 
 
 def compact_bloom_sidecar(spark: SparkSession, sidecar_dir: str) -> int:
@@ -704,50 +687,44 @@ def compact_bloom_sidecar(spark: SparkSession, sidecar_dir: str) -> int:
     word — the same merge the per-batch read does), so probe-side
     merge cost stays O(touched words) instead of O(segments × words).
     Run like any compaction: while ingest is quiesced. Crash-safe via
-    the scratch-dir + rename swap (a leftover ``old`` copy from a
-    previous crash is restored before compacting, mirroring
-    streaming/scd2.compact_history). Returns the merged word count."""
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path
-    fs = hp(sidecar_dir).getFileSystem(spark._jsc.hadoopConfiguration())
-    tmp, old = f"{sidecar_dir}__compact_tmp", f"{sidecar_dir}__old"
-    if fs.exists(hp(old)) and not fs.exists(hp(sidecar_dir)):
-        # crash between the two renames of a previous compaction:
-        # restore the saved copy before doing anything else
-        fs.rename(hp(old), hp(sidecar_dir))
+    ``sources.sinks.swap_dir`` (scratch ``<dir>__compact_tmp``, aside
+    copy ``<dir>__old``). Returns the merged word count."""
     from nsp_bolt_pipeline_spark.operators.sketches import BLOOM_BITS, BLOOM_K
 
-    # mergeSchema + null-coalesce: see _bloom_sidecar_meta — a
-    # mixed-era sidecar reads legacy rows' bits/k as NULL, and
-    # first(ignorenulls=False) could write a null-sized merged
-    # segment. Compaction also UPGRADES a legacy-only sidecar by
-    # writing the constants explicitly.
-    seg = spark.read.option("mergeSchema", "true").parquet(sidecar_dir)
-    meta_cols = (
-        [
-            F.coalesce(
-                F.first("bits", ignorenulls=True), F.lit(BLOOM_BITS)
-            ).alias("bits"),
-            F.coalesce(
-                F.first("k", ignorenulls=True), F.lit(BLOOM_K)
-            ).alias("k"),
-        ]
-        if "bits" in seg.columns
-        else [
-            F.lit(BLOOM_BITS).alias("bits"),
-            F.lit(BLOOM_K).alias("k"),
-        ]
+    def merged() -> DataFrame:
+        # mergeSchema + null-coalesce: see _bloom_sidecar_meta — a
+        # mixed-era sidecar reads legacy rows' bits/k as NULL, and
+        # first(ignorenulls=False) could write a null-sized merged
+        # segment. Compaction also UPGRADES a legacy-only sidecar by
+        # writing the constants explicitly.
+        seg = spark.read.option("mergeSchema", "true").parquet(sidecar_dir)
+        meta_cols = (
+            [
+                F.coalesce(
+                    F.first("bits", ignorenulls=True), F.lit(BLOOM_BITS)
+                ).alias("bits"),
+                F.coalesce(
+                    F.first("k", ignorenulls=True), F.lit(BLOOM_K)
+                ).alias("k"),
+            ]
+            if "bits" in seg.columns
+            else [
+                F.lit(BLOOM_BITS).alias("bits"),
+                F.lit(BLOOM_K).alias("k"),
+            ]
+        )
+        return seg.groupBy("word").agg(
+            F.bit_or("bits32").alias("bits32"), *meta_cols
+        )
+
+    swap_dir(
+        spark,
+        sidecar_dir,
+        merged,
+        scratch=f"{sidecar_dir}__compact_tmp",
+        aside=f"{sidecar_dir}__old",
     )
-    merged = seg.groupBy("word").agg(
-        F.bit_or("bits32").alias("bits32"), *meta_cols
-    )
-    n = merged.count()
-    merged.write.mode("overwrite").parquet(tmp)
-    fs.delete(hp(old), True)
-    fs.rename(hp(sidecar_dir), hp(old))
-    fs.rename(hp(tmp), hp(sidecar_dir))
-    fs.delete(hp(old), True)
-    return n
+    return spark.read.parquet(sidecar_dir).count()
 
 
 def run_cms_ingest(
@@ -781,13 +758,7 @@ def run_cms_ingest(
         part = cms_build(batch, text_col="text", depth=d, width=w)
         part.write.mode("append").parquet(sketch_dir)
 
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    drain(stream.writeStream.foreachBatch(process_batch), checkpoint_dir)
 
 
 def run_boilerplate_ingest(
@@ -815,10 +786,4 @@ def run_boilerplate_ingest(
         cleaned = strip_segments(batch, boiler, seg_words=seg_words)
         cleaned.write.mode("append").parquet(bronze_dir)
 
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    drain(stream.writeStream.foreachBatch(process_batch), checkpoint_dir)

@@ -56,7 +56,8 @@ def dump_json_batches(
     order (commutative folds like CMS/bottom-k, append-only logs
     collapsed at read like the SCD2 fragment history) — or the dump
     must be written sequentially with ascending mtimes (the per-day
-    gate entry does this). Timestamp columns must be pre-encoded (see
+    registry entries do this, ``registry_streaming._dump_event_days``).
+    Timestamp columns must be pre-encoded (see
     :func:`encode_event_times`) because JSON round-trips of native
     timestamps lose sub-millisecond precision."""
     out = df.repartitionByRange(n_files, *[F.col(c) for c in order_cols])

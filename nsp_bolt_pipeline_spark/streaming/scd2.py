@@ -32,7 +32,8 @@ Cost bound: a batch adds at most one boundary fragment per key it
 touches beyond the true run count, so the log holds <= true_runs +
 batches_per_key fragments — read-time collapse stays run-scale, not
 event-scale. Versions are idempotent under at-least-once delivery:
-``v=N`` is rewritten deterministically as ``v=N-1 UNION fragments(N)``.
+``v=N`` is rewritten deterministically as ``v=P UNION fragments(N)``,
+``P`` the latest version below ``N`` (``sources.sinks.version_below``).
 
 Reference parity: the reference keeps only latest state per key
 (lambdas/TripStartProcessor/TripStartProcessor.py:60-72); the history
@@ -46,25 +47,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from nsp_bolt_pipeline_spark.operators.scd import number_runs
-
-
-def _list_versions(spark, history_root: str) -> list[int]:
-    """List the ``v=<n>`` version numbers present under history_root
-    (non-integer suffixes — compaction scratch dirs — are ignored)."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(history_root)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return []
-    out = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if name.startswith("v="):
-            try:
-                out.append(int(name.split("=", 1)[1]))
-            except ValueError:
-                continue
-    return out
+from nsp_bolt_pipeline_spark.sources.sinks import (
+    drop_versions,
+    list_versions,
+    newest_version,
+    restore_aside,
+    swap_dir,
+    version_below,
+    version_dir,
+)
+from nsp_bolt_pipeline_spark.streaming.run import drain
 
 
 def _collapse_runs(runs: DataFrame, *, key: str, attr: str) -> DataFrame:
@@ -151,34 +143,21 @@ def run_scd2_history(
         # a batch-id gap (skipped empty trigger) or a prior run that
         # failed after checkpoint commit would otherwise silently drop
         # all accumulated history and serve a truncated log.
-        prior = [v for v in _list_versions(spark, history_root) if v < batch_id]
-        if prior:
+        prev = version_below(spark, history_root, batch_id)
+        if prev is not None:
             combined = spark.read.parquet(
-                f"{history_root}/v={max(prior)}"
+                version_dir(history_root, prev)
             ).unionByName(new_runs)
         else:
             combined = new_runs
         combined.write.mode("overwrite").parquet(
-            f"{history_root}/v={batch_id}"
+            version_dir(history_root, batch_id)
         )
 
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(stream.writeStream.foreachBatch(process_batch), checkpoint_dir)
+    return version_dir(
+        history_root, newest_version(stream.sparkSession, history_root)
     )
-    query.awaitTermination()
-
-    spark = stream.sparkSession
-    versions = _list_versions(spark, history_root)
-    if not versions:
-        raise ValueError(
-            f"no micro-batches were delivered; {history_root} holds no "
-            "history version (empty source, or all files already "
-            "committed in this checkpoint)"
-        )
-    return f"{history_root}/v={max(versions)}"
 
 
 def compact_history(
@@ -204,50 +183,29 @@ def compact_history(
     The compacted rewrite KEEPS the newest version number: ingest
     builds each batch on the latest version with id < batch_id, so a
     renumbering above the newest batch id could collide with (and be
-    invisible to) the next micro-batch. The swap goes through a
-    scratch dir (ignored by the version listing): a crash before the
-    first rename leaves the old copy live; a crash BETWEEN the renames
-    leaves only ``old_v<N>`` — which entry detects and auto-restores
-    (rename back to ``v=<N>``) before compacting, so the next
-    micro-batch never silently builds on an older version's truncated
-    history. Run it like any table-format OPTIMIZE: while ingest is
-    quiesced."""
-    jvm0 = spark._jvm
-    hp0 = jvm0.org.apache.hadoop.fs.Path
-    fs0 = hp0(history_root).getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs0.exists(hp0(history_root)):
-        for st in fs0.listStatus(hp0(history_root)):
-            name = st.getPath().getName()
-            if name.startswith("old_v"):
-                v = name[len("old_v"):]
-                if not fs0.exists(hp0(f"{history_root}/v={v}")):
-                    # crash between the two renames of a previous run:
-                    # the saved copy is the only live v=<N> — restore
-                    fs0.rename(st.getPath(), hp0(f"{history_root}/v={v}"))
-                else:
-                    # crash after the swap completed but before the
-                    # cleanup delete: v=<N> is authoritative
-                    fs0.delete(st.getPath(), True)
-        # a stale scratch dir is never authoritative — drop it
-        fs0.delete(hp0(f"{history_root}/compact_tmp"), True)
-    versions = sorted(_list_versions(spark, history_root))
-    if not versions:
-        raise ValueError(f"{history_root} holds no history version")
-    newest = versions[-1]
-    compacted = _collapse_runs(
-        spark.read.parquet(f"{history_root}/v={newest}"), key=key, attr=attr
+    invisible to) the next micro-batch. The rewrite goes through
+    ``sources.sinks.swap_dir`` (scratch ``compact_tmp``, aside copy
+    ``old_v<N>``, both ignored by the version listing); an aside copy
+    a crash left behind is restored to ``v=<N>`` before the newest
+    version is chosen, so the next micro-batch never silently builds
+    on an older version's truncated history. Run it like any
+    table-format OPTIMIZE: while ingest is quiesced."""
+    for v in list_versions(spark, history_root, prefix="old_v"):
+        restore_aside(
+            spark, version_dir(history_root, v), f"{history_root}/old_v{v}"
+        )
+    versions = list_versions(spark, history_root)
+    newest = newest_version(spark, history_root)
+    live = version_dir(history_root, newest)
+    swap_dir(
+        spark,
+        live,
+        lambda: _collapse_runs(spark.read.parquet(live), key=key, attr=attr),
+        scratch=f"{history_root}/compact_tmp",
+        aside=f"{history_root}/old_v{newest}",
     )
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path
-    fs = hp(history_root).getFileSystem(spark._jsc.hadoopConfiguration())
-    tmp = f"{history_root}/compact_tmp"
-    compacted.write.mode("overwrite").parquet(tmp)
-    old = f"{history_root}/old_v{newest}"
-    fs.delete(hp(old), True)
-    fs.rename(hp(f"{history_root}/v={newest}"), hp(old))
-    fs.rename(hp(tmp), hp(f"{history_root}/v={newest}"))
-    fs.delete(hp(old), True)
     # prune superseded versions beyond keep_versions (newest included)
-    for v in sorted(versions, reverse=True)[keep_versions:]:
-        fs.delete(hp(f"{history_root}/v={v}"), True)
-    return f"{history_root}/v={newest}"
+    drop_versions(
+        spark, history_root, sorted(versions, reverse=True)[keep_versions:]
+    )
+    return live

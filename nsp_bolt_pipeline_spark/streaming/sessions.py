@@ -55,22 +55,3 @@ def streaming_session_agg(
         F.col("w.end").alias("session_end"),
         *measures.keys(),
     )
-
-
-def run_session_agg(
-    sessions: DataFrame,
-    *,
-    out_dir: str,
-    checkpoint_dir: str,
-) -> None:
-    """Run the session aggregate to completion: append-mode parquet
-    sink, availableNow trigger. Closed sessions land exactly once."""
-    q = (
-        sessions.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -1,7 +1,10 @@
 """Guard against code that nothing calls: every top-level, undecorated
-function or class in ``nsp_bolt_pipeline_spark/`` and ``tools/`` must
-be referenced somewhere in the repo's Python — the package, tools,
-tests, perfbench, ``bench.py`` or ``__spark_entry__.py``.
+function or class in ``nsp_bolt_pipeline_spark/`` and ``tools/``, and
+every module-level name bound by a plain or annotated assignment
+(dunders such as ``__all__`` exempt), must be referenced somewhere in
+the repo's Python — the package, tools, tests, perfbench,
+``bench.py`` or ``__spark_entry__.py``. The binding itself does not
+count as a reference.
 
 A reference is any use of the name as an identifier (a call, an
 attribute access, an import) or as an identifier-shaped string
@@ -64,7 +67,32 @@ def unreferenced_definitions() -> list[str]:
                 node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
             ) and not node.decorator_list:
                 defs.append((rel, node.lineno, node.name))
-    return [f"{rel}:{line} {name}" for rel, line, name in defs if not refs[name]]
+            for name in _assigned_names(node):
+                refs[name] -= 1  # the binding's own Name node
+                if not (name.startswith("__") and name.endswith("__")):
+                    defs.append((rel, node.lineno, name))
+    return [
+        f"{rel}:{line} {name}" for rel, line, name in defs if refs[name] <= 0
+    ]
+
+
+def _assigned_names(node: ast.stmt) -> list[str]:
+    """Names a module-level ``x = ...``/``x: T = ...`` statement binds
+    (tuple targets unpacked)."""
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign) and node.value is not None:
+        targets = [node.target]
+    else:
+        return []
+    out, stack = [], list(targets)
+    while stack:
+        t = stack.pop()
+        if isinstance(t, ast.Name):
+            out.append(t.id)
+        elif isinstance(t, (ast.Tuple, ast.List)):
+            stack.extend(t.elts)
+    return out
 
 
 def test_every_top_level_definition_is_referenced():

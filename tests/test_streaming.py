@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -306,6 +307,56 @@ class TestSilverUpsert:
         latest = self._upsert(spark, src, silver, ckpt)
         got = {r["key"]: r["fare"] for r in spark.read.parquet(latest).collect()}
         assert got == {"k1": 90.0}
+
+
+#: one wire carrying the columns every versioned sink below reads
+VERSIONED_WIRE = T.StructType(
+    [
+        T.StructField("key", T.StringType()),
+        T.StructField("side", T.StringType()),
+        T.StructField("attr", T.StringType()),
+        T.StructField("ts", T.LongType()),
+        T.StructField("event_id", T.LongType()),
+    ]
+)
+
+
+@pytest.mark.parametrize("sink", ["silver", "scd2", "keeper"])
+def test_versioned_sink_with_no_versions_names_its_root(spark, tmp_path, sink):
+    """An empty source delivers no micro-batch, so no ``v=<n>`` version
+    exists: each versioned sink reports it with the same ValueError
+    naming the root (not a JVM listing error or FileNotFoundError)."""
+    from nsp_bolt_pipeline_spark.streaming.completion import (
+        read_keeper_state,
+        run_capped_completion_log,
+    )
+    from nsp_bolt_pipeline_spark.streaming.ingest import run_silver_upsert
+    from nsp_bolt_pipeline_spark.streaming.scd2 import run_scd2_history
+
+    src, root, ckpt = _dirs(tmp_path, "src", "root", "ckpt")
+    os.makedirs(src)
+    stream = read_wire_stream(spark, src, VERSIONED_WIRE)
+
+    def keeper():
+        run_capped_completion_log(
+            stream, state_root=root, checkpoint_dir=ckpt, key="key",
+            max_rows_per_key=2,
+        )
+        return read_keeper_state(spark, root)
+
+    run = {
+        "silver": lambda: run_silver_upsert(
+            stream, silver_root=root, checkpoint_dir=ckpt, keys=["key"],
+            order_cols=["ts"],
+        ),
+        "scd2": lambda: run_scd2_history(
+            stream, history_root=root, checkpoint_dir=ckpt, key="key",
+            attr="attr",
+        ),
+        "keeper": keeper,
+    }[sink]
+    with pytest.raises(ValueError, match=re.escape(root)):
+        run()
 
 
 class TestDLQ:
@@ -1253,8 +1304,8 @@ class TestStreamingSessions:
     )
 
     def _run(self, spark, tmp_path, batches):
+        from nsp_bolt_pipeline_spark.streaming.run import run_append
         from nsp_bolt_pipeline_spark.streaming.sessions import (
-            run_session_agg,
             streaming_session_agg,
         )
 
@@ -1272,7 +1323,7 @@ class TestStreamingSessions:
             measures={"n_events": F.count("*"), "total": F.sum("value")},
             watermark_delay="1 hour",
         )
-        run_session_agg(sessions, out_dir=out, checkpoint_dir=ckpt)
+        run_append(sessions, out_dir=out, checkpoint_dir=ckpt)
         return (
             spark.read.parquet(out)
             .filter(F.col("user_id") >= 0)
